@@ -131,11 +131,7 @@ object LangScript {
   /** Deterministic language-ID: score = matched marker-word tokens per
     * language / total tokens; <20 chars stripped → unknown (mirrors
     * `ocr_engine.py:788-795`); non-Latin scripts short-circuit on script. */
-  def detectLanguage(text: String): LangResult = detectLanguage(text, null)
-
-  /** The preTokens overload is kept for API compatibility; the internal
-    * zero-alloc scorer no longer needs pre-computed tokens. */
-  def detectLanguage(text: String, preTokens: Array[String]): LangResult = {
+  def detectLanguage(text: String): LangResult = {
     if (text == null || PyText.strippedLength(text) < 20)
       return LangResult("unknown", 0.0, Nil, "unknown")
     val script = detectScript(text)

@@ -50,11 +50,14 @@ case class LevenshteinBounded(first: Expression, second: Expression,
 object LevenshteinBounded {
 
   /** Banded DP. Returns the exact distance when ≤ k, else −1. */
-  def compute(s: String, t: String, k: Int): Int = {
-    if (k < 0) return -1
+  def compute(s: String, t: String, radius: Int): Int = {
+    if (radius < 0) return -1
     val m = s.length
     val n = t.length
-    if (math.abs(m - n) > k) return -1
+    if (math.abs(m - n) > radius) return -1
+    // the distance never exceeds max(m, n); clamping keeps k + 1 and
+    // i + k below Int overflow for any radius
+    val k = math.min(radius, math.max(m, n))
     if (m == 0) return n // n = |m-n| <= k here
     if (n == 0) return m
     val inf = k + 1

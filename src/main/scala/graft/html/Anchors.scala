@@ -3,6 +3,8 @@ package graft.html
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
+import Fold.collapseWs
+
 /** Anchor (link) extraction from real HTML via the streaming tokenizer
   * — the bridge between content extraction and the link graph: hrefs
   * feed `ops.LinkGraph` edges and `ops.UrlFilter` frontier rules;
@@ -22,43 +24,25 @@ import org.apache.spark.sql.functions.col
   */
 object Anchors {
 
-  private def collapseWs(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    var inWs = false
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (Character.isWhitespace(c)) inWs = true
-      else {
-        if (inWs && sb.nonEmpty) sb.append(' ')
-        inWs = false
-        sb.append(c)
-      }
-      i += 1
-    }
-    sb.toString
-  }
-
   /** All (href, anchor_text) pairs in document order. */
   def extract(html: String): List[(String, String)] = {
+    import HtmlTokenizer._
     val out = List.newBuilder[(String, String)]
-    var href: String = null
-    val sb = new StringBuilder
+    val anchor = new Fold.Capture // keyed by href
     def close(): Unit =
-      if (href != null) {
-        out += ((href, collapseWs(sb.toString)))
-        href = null
-        sb.setLength(0)
+      if (anchor.isOpen) {
+        val href = anchor.key
+        out += ((href, collapseWs(anchor.close())))
       }
-    HtmlTokenizer.tokenize(html).foreach {
-      case HtmlTokenizer.StartTag("a", attrs, selfClosing) =>
+    tokenize(html).foreach {
+      case tag @ StartTag("a", _, selfClosing) =>
         close()
-        attrs.collectFirst { case ("href", v) if v.nonEmpty => v }
-          .foreach { h =>
-            if (selfClosing) out += ((h, "")) else href = h
-          }
-      case HtmlTokenizer.EndTag("a") => close()
-      case HtmlTokenizer.Text(t) if href != null => sb.append(t)
+        val href = tag.attr("href")
+        if (href.nonEmpty) {
+          if (selfClosing) out += ((href, "")) else anchor.open(href)
+        }
+      case EndTag("a") => close()
+      case Text(t) => anchor.append(t)
       case _ => ()
     }
     close()
@@ -67,17 +51,10 @@ object Anchors {
 
   /** Explodes each row into (id, href, anchor_text) rows — one typed
     * flatMap, map-only. */
-  def anchorRows(df: DataFrame, idCol: String, htmlCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(htmlCol).cast("string"))
-      .as[(Long, String)]
-      .flatMap { case (id, html) =>
-        extract(Option(html).getOrElse(""))
-          .map { case (h, t) => (id, h, t) }
-      }
-      .toDF(idCol, "href", "anchor_text")
-  }
+  def anchorRows(df: DataFrame, idCol: String, htmlCol: String): DataFrame =
+    Fold.rows(df, idCol, htmlCol, "href", "anchor_text") { (id, html) =>
+      extract(html).map { case (h, t) => (id, h, t) }
+    }
 
   private def hostOf(url: String): String = {
     val at = url.indexOf("://")
@@ -103,10 +80,9 @@ object Anchors {
                      pageHost: String): (Long, Long, Long, Long) = {
     var n = 0L; var internal = 0L; var external = 0L; var nofollow = 0L
     val ph = pageHost.toLowerCase(java.util.Locale.ROOT)
-    HtmlTokenizer.tokenize(Option(html).getOrElse("")).foreach {
-      case HtmlTokenizer.StartTag("a", attrs, _) =>
-        val href = attrs.collectFirst { case ("href", v) => v }
-          .getOrElse("")
+    HtmlTokenizer.tokenize(html).foreach {
+      case tag @ HtmlTokenizer.StartTag("a", _, _) =>
+        val href = tag.attr("href")
         val lower = href.toLowerCase(java.util.Locale.ROOT)
         val skip = href.isEmpty || lower.startsWith("mailto:") ||
           lower.startsWith("javascript:") || lower.startsWith("tel:") ||
@@ -118,10 +94,8 @@ object Anchors {
               lower.startsWith("https://")) hostOf(href)
             else ""
           if (h.isEmpty || h == ph) internal += 1 else external += 1
-          val rel = attrs.collectFirst { case ("rel", v) => v }
-            .getOrElse("")
-          if (rel.toLowerCase(java.util.Locale.ROOT).split("\\s+")
-            .contains("nofollow")) nofollow += 1
+          if (Fold.relTokens(tag.attr("rel")).contains("nofollow"))
+            nofollow += 1
         }
       case _ => ()
     }

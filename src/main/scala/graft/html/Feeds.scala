@@ -1,7 +1,6 @@
 package graft.html
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 
 /** RSS 2.0 / Atom feed parsing for crawl discovery — the other half of
   * the discovery pair with `html.Sitemap`: feeds carry the NEW urls of
@@ -28,6 +27,8 @@ object Feeds {
   final case class FeedItem(kind: String, itemIdx: Int, title: String,
                             link: String, date: String)
 
+  private val itemTag = Map("rss" -> "item", "atom" -> "entry")
+
   def items(xml: String): Vector[FeedItem] = {
     import HtmlTokenizer._
     val out = Vector.newBuilder[FeedItem]
@@ -37,39 +38,33 @@ object Feeds {
     var title: String = null
     var link: String = null
     var date: String = null
-    var field: String = null // which text field we're collecting
-    val sb = new StringBuilder
-
-    def attr(attrs: List[(String, String)], name: String): String =
-      attrs.collectFirst { case (k, v) if k == name => v }.getOrElse("")
+    val field = new Fold.Capture // keyed by the item field being read
 
     def endField(): Unit = {
-      if (field != null) {
-        var v = sb.toString.trim
+      if (field.isOpen) {
+        val name = field.key
+        var v = field.close().trim
         // title is RCDATA to the HTML tokenizer, so an RSS CDATA
         // section arrives literally — unwrap the conventional single
         // outer wrapper
         if (v.startsWith("<![CDATA[") && v.endsWith("]]>") &&
           v.length >= 12)
           v = v.substring(9, v.length - 3).trim
-        field match {
+        name match {
           case "title" => if (title == null) title = v
           case "link" => if (link == null) link = v
           case "date" => if (date == null) date = v
         }
-        field = null; sb.setLength(0)
       }
     }
 
-    tokenize(Option(xml).getOrElse("")).foreach {
+    tokenize(xml).foreach {
       case StartTag("rss", _, _) if kind == null => kind = "rss"
       case StartTag("feed", _, _) if kind == null => kind = "atom"
-      case StartTag(t, _, _) if (t == "item" && kind == "rss") ||
-        (t == "entry" && kind == "atom") =>
+      case StartTag(t, _, _) if itemTag.get(kind).contains(t) =>
         inItem = true; title = null; link = null; date = null
-        field = null; sb.setLength(0)
-      case EndTag(t) if (t == "item" && kind == "rss") ||
-        (t == "entry" && kind == "atom") =>
+        field.close()
+      case EndTag(t) if itemTag.get(kind).contains(t) =>
         if (inItem) {
           endField()
           def nz(s: String) = if (s == null) "" else s
@@ -77,21 +72,21 @@ object Feeds {
           idx += 1; inItem = false
         }
       case StartTag("title", _, _) if inItem =>
-        endField(); field = "title"
-      case StartTag("link", attrs, _) if inItem =>
+        endField(); field.open("title")
+      case tag @ StartTag("link", _, _) if inItem =>
         if (kind == "atom") {
-          val rel = attr(attrs, "rel")
+          val rel = tag.attr("rel")
           if (link == null && (rel.isEmpty ||
             rel.equalsIgnoreCase("alternate")))
-            link = attr(attrs, "href")
-        } else { endField(); field = "link" }
+            link = tag.attr("href")
+        } else { endField(); field.open("link") }
       case StartTag("pubdate", _, _) if inItem && kind == "rss" =>
-        endField(); field = "date"
+        endField(); field.open("date")
       case StartTag("updated", _, _) if inItem && kind == "atom" =>
-        endField(); field = "date"
+        endField(); field.open("date")
       case EndTag("title") | EndTag("link") | EndTag("pubdate") |
         EndTag("updated") => endField()
-      case Text(t) if field != null => sb.append(t)
+      case Text(t) => field.append(t)
       case _ => ()
     }
     out.result()
@@ -100,15 +95,10 @@ object Feeds {
   /** One row per feed item: (idCol, kind, item_idx, title, link,
     * item_date) — one typed flatMap, map-only; non-feed documents
     * emit no row. */
-  def itemRows(df: DataFrame, idCol: String, xmlCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(xmlCol).cast("string"))
-      .as[(Long, String)]
-      .flatMap { case (id, x) =>
-        items(x).map(it =>
-          (id, it.kind, it.itemIdx.toLong, it.title, it.link, it.date))
-      }
-      .toDF(idCol, "kind", "item_idx", "title", "link", "item_date")
-  }
+  def itemRows(df: DataFrame, idCol: String, xmlCol: String): DataFrame =
+    Fold.rows(df, idCol, xmlCol, "kind", "item_idx", "title", "link",
+        "item_date") { (id, x) =>
+      items(x).map(it =>
+        (id, it.kind, it.itemIdx.toLong, it.title, it.link, it.date))
+    }
 }

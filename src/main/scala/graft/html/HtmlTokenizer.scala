@@ -19,7 +19,10 @@ import scala.collection.mutable.ArrayBuffer
 object HtmlTokenizer {
 
   sealed trait Token
-  final case class StartTag(name: String, attrs: List[(String, String)], selfClosing: Boolean) extends Token
+  final case class StartTag(name: String, attrs: List[(String, String)], selfClosing: Boolean) extends Token {
+    /** Value of the first attribute called `key` (lower-case), "" when absent. */
+    def attr(key: String): String = attrs.collectFirst { case (`key`, v) => v }.getOrElse("")
+  }
   final case class EndTag(name: String) extends Token
   final case class Text(value: String) extends Token
   final case class Comment(value: String) extends Token
@@ -32,8 +35,10 @@ object HtmlTokenizer {
   private val rcdataTags  = Set("textarea", "title")
 
   /** Returns the builder itself as an immutable-by-convention IndexedSeq
-    * (no defensive copy; the token stream is single-consumer). */
+    * (no defensive copy; the token stream is single-consumer). A null
+    * page tokenizes to no tokens. */
   def tokenize(html: String): scala.collection.IndexedSeq[Token] = {
+    if (html == null) return IndexedSeq.empty
     val out = new ArrayBuffer[Token](256)
     val n = html.length
     var i = 0

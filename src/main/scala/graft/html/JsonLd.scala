@@ -26,19 +26,15 @@ object JsonLd {
 
   /** Raw payloads of ld+json script blocks, in document order. */
   def blocks(html: String): Vector[String] = {
+    import HtmlTokenizer._
     val out = Vector.newBuilder[String]
-    var inLd = false
-    val sb = new StringBuilder
-    HtmlTokenizer.tokenize(Option(html).getOrElse("")).foreach {
-      case HtmlTokenizer.StartTag("script", attrs, selfClosing) =>
-        val t = attrs.collectFirst { case ("type", v) => v }.getOrElse("")
-        if (!selfClosing &&
-          t.trim.equalsIgnoreCase("application/ld+json")) {
-          inLd = true; sb.setLength(0)
-        }
-      case HtmlTokenizer.EndTag("script") =>
-        if (inLd) { out += sb.toString.trim; inLd = false }
-      case HtmlTokenizer.Text(t) if inLd => sb.append(t)
+    val ld = new Fold.Capture
+    tokenize(html).foreach {
+      case tag @ StartTag("script", _, false) =>
+        if (tag.attr("type").trim.equalsIgnoreCase("application/ld+json"))
+          ld.open("script")
+      case EndTag("script") => if (ld.isOpen) out += ld.close().trim
+      case Text(t) => ld.append(t)
       case _ => ()
     }
     out.result()
@@ -46,16 +42,10 @@ object JsonLd {
 
   /** One row per ld+json block: (idCol, block_idx, blob) — one typed
     * flatMap, map-only; documents without a block emit no row. */
-  def blockRows(df: DataFrame, idCol: String, htmlCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(htmlCol).cast("string"))
-      .as[(Long, String)]
-      .flatMap { case (id, h) =>
-        blocks(h).zipWithIndex.map { case (b, i) => (id, i.toLong, b) }
-      }
-      .toDF(idCol, "block_idx", "blob")
-  }
+  def blockRows(df: DataFrame, idCol: String, htmlCol: String): DataFrame =
+    Fold.rows(df, idCol, htmlCol, "block_idx", "blob") { (id, h) =>
+      blocks(h).zipWithIndex.map { case (b, i) => (id, i.toLong, b) }
+    }
 
   /** Blocks + the article fields as codegen JSON-path projections:
     * `@type`, headline, datePublished, author.name — NULL when the

@@ -1,7 +1,6 @@
 package graft.html
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 
 /** HTML → Markdown rendering over the error-tolerant DOM — the text
   * format modern LLM-corpus pipelines emit for web pages (structure
@@ -34,15 +33,12 @@ object Markdown {
     "noscript", "iframe", "svg", "canvas", "object", "embed", "select",
     "button", "input", "textarea", "option")
 
-  private val headingLevel = Map("h1" -> 1, "h2" -> 2, "h3" -> 3,
-    "h4" -> 4, "h5" -> 5, "h6" -> 6)
-
   private val blockTags = Set("html", "body", "p", "div", "section",
     "article", "header", "footer", "main", "aside", "nav", "figure",
     "figcaption", "blockquote", "pre", "ul", "ol", "li", "table", "hr",
     "dl", "dt", "dd", "form", "fieldset", "address", "details",
     "summary", "caption", "thead", "tbody", "tfoot", "tr", "td",
-    "th") ++ headingLevel.keySet
+    "th") ++ Fold.headingLevel.keySet
 
   private def appendCollapsed(sb: StringBuilder, s: String): Unit = {
     var i = 0
@@ -160,10 +156,10 @@ object Markdown {
   }
 
   private def blockOf(e: Element): Vector[String] = e.tag match {
-    case t if headingLevel.contains(t) =>
+    case t if Fold.headingLevel.contains(t) =>
       val txt = inlineOf(e.children)
       if (txt.isEmpty) Vector.empty
-      else Vector("#" * headingLevel(t) + " " + txt)
+      else Vector("#" * Fold.headingLevel(t) + " " + txt)
     case "p" | "figcaption" | "caption" | "summary" | "address" =>
       val txt = inlineOf(e.children)
       if (txt.isEmpty) Vector.empty else Vector(txt)
@@ -192,18 +188,14 @@ object Markdown {
 
   /** Render an HTML page to the pinned markdown dialect. */
   def render(html: String): String =
-    renderChildren(DomBuilder.parse(Option(html).getOrElse("")).children)
+    renderChildren(DomBuilder.parse(html).children)
       .mkString("\n\n")
 
   /** One row per document: (idCol, markdown) — one typed map,
     * map-only. */
   def markdownRows(df: DataFrame, idCol: String,
-                   htmlCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(htmlCol).cast("string"))
-      .as[(Long, String)]
-      .map { case (id, h) => (id, render(h)) }
-      .toDF(idCol, "markdown")
-  }
+                   htmlCol: String): DataFrame =
+    Fold.rows(df, idCol, htmlCol, "markdown") { (id, h) =>
+      Some((id, render(h)))
+    }
 }

@@ -1,7 +1,8 @@
 package graft.html
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+
+import Fold.{collapseWs, relTokens}
 
 /** Head-metadata extraction from real HTML via the streaming tokenizer
   * — the page-level fields a web corpus indexes next to the extracted
@@ -29,31 +30,8 @@ object Meta {
     baseHref: String, charset: String, ogTitle: String,
     noindex: Boolean, nofollow: Boolean, nAlternates: Int)
 
-  private def collapseWs(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    var inWs = false
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (Character.isWhitespace(c)) inWs = true
-      else {
-        if (inWs && sb.nonEmpty) sb.append(' ')
-        inWs = false
-        sb.append(c)
-      }
-      i += 1
-    }
-    sb.toString
-  }
-
-  private def attr(attrs: List[(String, String)], name: String): String =
-    attrs.collectFirst { case (k, v) if k == name => v }.getOrElse("")
-
-  private def relTokens(rel: String): Set[String] =
-    rel.toLowerCase(java.util.Locale.ROOT).split("\\s+")
-      .iterator.filter(_.nonEmpty).toSet
-
   def extract(htmlText: String): PageMeta = {
+    import HtmlTokenizer._
     var title: String = null
     var desc: String = null
     var canonical: String = null
@@ -63,18 +41,16 @@ object Meta {
     var noindex = false
     var nofollow = false
     var nAlt = 0
-    var inTitle = false
-    val titleSb = new StringBuilder
-    HtmlTokenizer.tokenize(htmlText).foreach {
-      case HtmlTokenizer.StartTag("title", _, selfClosing) =>
-        if (title == null && !selfClosing) inTitle = true
-      case HtmlTokenizer.EndTag("title") =>
-        if (inTitle) { title = collapseWs(titleSb.toString); inTitle = false }
-      case HtmlTokenizer.Text(t) if inTitle => titleSb.append(t)
-      case HtmlTokenizer.StartTag("meta", attrs, _) =>
-        val name = attr(attrs, "name").toLowerCase(java.util.Locale.ROOT)
-        val content = attr(attrs, "content")
-        name match {
+    val titleText = new Fold.Capture
+    tokenize(htmlText).foreach {
+      case StartTag("title", _, selfClosing) =>
+        if (title == null && !selfClosing) titleText.open("title")
+      case EndTag("title") =>
+        if (titleText.isOpen) title = collapseWs(titleText.close())
+      case Text(t) => titleText.append(t)
+      case tag @ StartTag("meta", _, _) =>
+        val content = tag.attr("content")
+        tag.attr("name").toLowerCase(java.util.Locale.ROOT) match {
           case "description" => if (desc == null && content.nonEmpty) desc = content
           case "robots" =>
             content.toLowerCase(java.util.Locale.ROOT).split(",")
@@ -86,25 +62,24 @@ object Meta {
               }
           case _ => ()
         }
-        if (attr(attrs, "property")
-            .equalsIgnoreCase("og:title") && ogTitle == null &&
-          content.nonEmpty) ogTitle = content
-        val cs = attr(attrs, "charset")
+        if (tag.attr("property").equalsIgnoreCase("og:title") &&
+          ogTitle == null && content.nonEmpty) ogTitle = content
+        val cs = tag.attr("charset")
         if (cs.nonEmpty && charset == null)
           charset = cs.toLowerCase(java.util.Locale.ROOT)
-      case HtmlTokenizer.StartTag("link", attrs, _) =>
-        val rel = relTokens(attr(attrs, "rel"))
-        val href = attr(attrs, "href")
+      case tag @ StartTag("link", _, _) =>
+        val rel = relTokens(tag.attr("rel"))
+        val href = tag.attr("href")
         if (rel.contains("canonical") && canonical == null && href.nonEmpty)
           canonical = href
-        if (rel.contains("alternate") &&
-          attr(attrs, "hreflang").nonEmpty) nAlt += 1
-      case HtmlTokenizer.StartTag("base", attrs, _) =>
-        val href = attr(attrs, "href")
+        if (rel.contains("alternate") && tag.attr("hreflang").nonEmpty)
+          nAlt += 1
+      case tag @ StartTag("base", _, _) =>
+        val href = tag.attr("href")
         if (base == null && href.nonEmpty) base = href
       case _ => ()
     }
-    if (inTitle && title == null) title = collapseWs(titleSb.toString)
+    if (titleText.isOpen) title = collapseWs(titleText.close())
     def nz(s: String) = if (s == null) "" else s
     PageMeta(nz(title), nz(desc), nz(canonical), nz(base), nz(charset),
       nz(ogTitle), noindex, nofollow, nAlt)
@@ -121,10 +96,10 @@ object Meta {
     * yields an empty target. */
   def metaRefresh(html: String): Option[(Long, String)] = {
     var found: Option[(Long, String)] = None
-    HtmlTokenizer.tokenize(Option(html).getOrElse("")).foreach {
-      case HtmlTokenizer.StartTag("meta", attrs, _) if found.isEmpty &&
-        attr(attrs, "http-equiv").equalsIgnoreCase("refresh") =>
-        val content = attr(attrs, "content")
+    HtmlTokenizer.tokenize(html).foreach {
+      case tag @ HtmlTokenizer.StartTag("meta", _, _) if found.isEmpty &&
+        tag.attr("http-equiv").equalsIgnoreCase("refresh") =>
+        val content = tag.attr("content")
         val parts = content.split(";", 2)
         val digits = parts(0).trim.takeWhile(_.isDigit)
         if (digits.nonEmpty) {
@@ -149,16 +124,10 @@ object Meta {
   /** One row per document WITH a valid refresh: (idCol, delay_sec,
     * target_url) — one typed flatMap, map-only. */
   def refreshRows(df: DataFrame, idCol: String,
-                  htmlCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(htmlCol).cast("string"))
-      .as[(Long, String)]
-      .flatMap { case (id, h) =>
-        metaRefresh(h).map { case (d, u) => (id, d, u) }
-      }
-      .toDF(idCol, "delay_sec", "target_url")
-  }
+                  htmlCol: String): DataFrame =
+    Fold.rows(df, idCol, htmlCol, "delay_sec", "target_url") { (id, h) =>
+      metaRefresh(h).map { case (d, u) => (id, d, u) }
+    }
 
   /** `<link rel="alternate" hreflang=… href=…>` pairs in document
     * order — the multilingual cluster map (one page's translations),
@@ -169,12 +138,12 @@ object Meta {
     * legitimate hreflang value and passes through. */
   def alternates(html: String): Vector[(String, String)] = {
     val out = Vector.newBuilder[(String, String)]
-    HtmlTokenizer.tokenize(Option(html).getOrElse("")).foreach {
-      case HtmlTokenizer.StartTag("link", attrs, _) =>
-        val rel = relTokens(attr(attrs, "rel"))
-        val lang = attr(attrs, "hreflang")
-        val href = attr(attrs, "href")
-        if (rel.contains("alternate") && lang.nonEmpty && href.nonEmpty)
+    HtmlTokenizer.tokenize(html).foreach {
+      case tag @ HtmlTokenizer.StartTag("link", _, _) =>
+        val lang = tag.attr("hreflang")
+        val href = tag.attr("href")
+        if (relTokens(tag.attr("rel")).contains("alternate") &&
+          lang.nonEmpty && href.nonEmpty)
           out += ((lang, href))
       case _ => ()
     }
@@ -188,10 +157,10 @@ object Meta {
     * assemble whole pagination chains in log-depth joins. */
   def nextLink(html: String): String = {
     var found: String = null
-    HtmlTokenizer.tokenize(Option(html).getOrElse("")).foreach {
-      case HtmlTokenizer.StartTag("link", attrs, _) if found == null =>
-        val href = attr(attrs, "href")
-        if (relTokens(attr(attrs, "rel")).contains("next") &&
+    HtmlTokenizer.tokenize(html).foreach {
+      case tag @ HtmlTokenizer.StartTag("link", _, _) if found == null =>
+        val href = tag.attr("href")
+        if (relTokens(tag.attr("rel")).contains("next") &&
           href.nonEmpty) found = href
       case _ => ()
     }
@@ -201,32 +170,21 @@ object Meta {
   /** One row per alternate: (idCol, alt_idx, hreflang, href) — one
     * typed flatMap, map-only. */
   def alternateRows(df: DataFrame, idCol: String,
-                    htmlCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(htmlCol).cast("string"))
-      .as[(Long, String)]
-      .flatMap { case (id, h) =>
-        alternates(h).zipWithIndex.map { case ((l, u), i) =>
-          (id, i.toLong, l, u)
-        }
+                    htmlCol: String): DataFrame =
+    Fold.rows(df, idCol, htmlCol, "alt_idx", "hreflang", "href") { (id, h) =>
+      alternates(h).zipWithIndex.map { case ((l, u), i) =>
+        (id, i.toLong, l, u)
       }
-      .toDF(idCol, "alt_idx", "hreflang", "href")
-  }
+    }
 
   /** One row per document: the PageMeta fields as columns — one typed
     * map, map-only. */
-  def metaRows(df: DataFrame, idCol: String, htmlCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(htmlCol).cast("string"))
-      .as[(Long, String)]
-      .map { case (id, h) =>
-        val m = extract(Option(h).getOrElse(""))
-        (id, m.title, m.description, m.canonical, m.baseHref, m.charset,
-          m.ogTitle, m.noindex, m.nofollow, m.nAlternates)
-      }
-      .toDF(idCol, "title", "description", "canonical", "base_href",
-        "charset", "og_title", "noindex", "nofollow", "n_alternates")
-  }
+  def metaRows(df: DataFrame, idCol: String, htmlCol: String): DataFrame =
+    Fold.rows(df, idCol, htmlCol, "title", "description", "canonical",
+        "base_href", "charset", "og_title", "noindex", "nofollow",
+        "n_alternates") { (id, h) =>
+      val m = extract(h)
+      Some((id, m.title, m.description, m.canonical, m.baseHref, m.charset,
+        m.ogTitle, m.noindex, m.nofollow, m.nAlternates))
+    }
 }

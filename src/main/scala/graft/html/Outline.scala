@@ -1,7 +1,6 @@
 package graft.html
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 
 /** Document outline extraction — the h1-h6 heading hierarchy with
   * computed section numbers, the structure signal layout-aware
@@ -16,71 +15,48 @@ import org.apache.spark.sql.functions.col
   *
   * Heading text: all text inside the heading element (inline markup
   * flattened), whitespace-collapsed; a heading with no text still
-  * emits (its number still advances the outline).
+  * emits (its number still advances the outline). A heading closes at
+  * its own end tag, at the next h1-h6 start tag (as in WHATWG parsing)
+  * or at end of document, so an unclosed heading never hides the rest.
   *
   * Scale shape: one typed flatMap per document, map-only.
   */
 object Outline {
-
-  private val levelOf = Map("h1" -> 1, "h2" -> 2, "h3" -> 3,
-    "h4" -> 4, "h5" -> 5, "h6" -> 6)
-
-  private def collapseWs(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    var inWs = false
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (Character.isWhitespace(c)) inWs = true
-      else {
-        if (inWs && sb.nonEmpty) sb.append(' ')
-        inWs = false
-        sb.append(c)
-      }
-      i += 1
-    }
-    sb.toString
-  }
 
   /** (level, sectionNumber, text) per heading, document order. */
   def headings(html: String): Vector[(Int, String, String)] = {
     import HtmlTokenizer._
     val out = Vector.newBuilder[(Int, String, String)]
     val counters = new Array[Int](7)
-    var curLevel = 0 // 0 = not inside a heading
-    var curTag: String = null
-    val sb = new StringBuilder
-    tokenize(Option(html).getOrElse("")).foreach {
-      case StartTag(t, _, selfClosing) if levelOf.contains(t) &&
-        curLevel == 0 && !selfClosing =>
-        curLevel = levelOf(t); curTag = t; sb.setLength(0)
-      case EndTag(t) if curLevel != 0 && t == curTag =>
-        val l = curLevel
+    val heading = new Fold.Capture // keyed by the open h1-h6 tag
+    def close(): Unit =
+      if (heading.isOpen) {
+        val l = Fold.headingLevel(heading.key)
         counters(l) += 1
         var i = l + 1
         while (i <= 6) { counters(i) = 0; i += 1 }
         out += ((l, (1 to l).map(counters).mkString("."),
-          collapseWs(sb.toString)))
-        curLevel = 0; curTag = null
-      case Text(t) if curLevel != 0 => sb.append(t)
+          Fold.collapseWs(heading.close())))
+      }
+    tokenize(html).foreach {
+      case StartTag(t, _, false) if Fold.headingLevel.contains(t) =>
+        close(); heading.open(t)
+      case EndTag(t) if t == heading.key => close()
+      case Text(t) => heading.append(t)
       case _ => ()
     }
+    close()
     out.result()
   }
 
   /** One row per heading: (idCol, heading_idx, level, section, text)
     * — one typed flatMap, map-only. */
   def headingRows(df: DataFrame, idCol: String,
-                  htmlCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(htmlCol).cast("string"))
-      .as[(Long, String)]
-      .flatMap { case (id, h) =>
-        headings(h).zipWithIndex.map { case ((l, num, txt), i) =>
-          (id, i.toLong, l.toLong, num, txt)
-        }
+                  htmlCol: String): DataFrame =
+    Fold.rows(df, idCol, htmlCol, "heading_idx", "level", "section",
+        "heading_text") { (id, h) =>
+      headings(h).zipWithIndex.map { case ((l, num, txt), i) =>
+        (id, i.toLong, l.toLong, num, txt)
       }
-      .toDF(idCol, "heading_idx", "level", "section", "heading_text")
-  }
+    }
 }

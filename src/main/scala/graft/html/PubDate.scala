@@ -85,9 +85,6 @@ object PubDate {
     ""
   }
 
-  private def attr(attrs: List[(String, String)], name: String): String =
-    attrs.collectFirst { case (k, v) if k == name => v }.getOrElse("")
-
   /** (isoDate, source) per the object doc's precedence chain. */
   def extract(url: String, html: String): (String, String) = {
     // first-seen raw candidate per source (null = source absent)
@@ -95,28 +92,28 @@ object PubDate {
     var micro: String = null
     var metaDate: String = null
     var timeAttr: String = null
-    HtmlTokenizer.tokenize(Option(html).getOrElse("")).foreach {
-      case HtmlTokenizer.StartTag("meta", attrs, _) =>
-        val content = attr(attrs, "content")
-        if (og == null && attr(attrs, "property")
+    HtmlTokenizer.tokenize(html).foreach {
+      case tag @ HtmlTokenizer.StartTag("meta", _, _) =>
+        val content = tag.attr("content")
+        if (og == null && tag.attr("property")
             .equalsIgnoreCase("article:published_time") && content.nonEmpty)
           og = content
-        if (micro == null && attr(attrs, "itemprop")
+        if (micro == null && tag.attr("itemprop")
             .equalsIgnoreCase("datePublished") && content.nonEmpty)
           micro = content
-        if (metaDate == null && attr(attrs, "name")
+        if (metaDate == null && tag.attr("name")
             .equalsIgnoreCase("date") && content.nonEmpty)
           metaDate = content
-      case HtmlTokenizer.StartTag("time", attrs, _) =>
-        val dt = attr(attrs, "datetime")
+      case tag @ HtmlTokenizer.StartTag("time", _, _) =>
+        val dt = tag.attr("datetime")
         if (timeAttr == null && dt.nonEmpty) timeAttr = dt
       case _ => ()
     }
     val chain = Seq(
-      "og_article" -> Option(og).map(parseCandidate).getOrElse(""),
-      "microdata" -> Option(micro).map(parseCandidate).getOrElse(""),
-      "meta_date" -> Option(metaDate).map(parseCandidate).getOrElse(""),
-      "time_elem" -> Option(timeAttr).map(parseCandidate).getOrElse(""),
+      "og_article" -> parseCandidate(og),
+      "microdata" -> parseCandidate(micro),
+      "meta_date" -> parseCandidate(metaDate),
+      "time_elem" -> parseCandidate(timeAttr),
       "url_path" -> fromUrl(url))
     chain.collectFirst { case (src, d) if d.nonEmpty => (d, src) }
       .getOrElse(("", "none"))

@@ -1,7 +1,6 @@
 package graft.html
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 
 /** Sitemap parsing (sitemaps.org XML protocol) via the streaming
   * tokenizer — crawl discovery: the per-host list of fetchable URLs
@@ -27,24 +26,20 @@ object Sitemap {
                          changefreq: String, priority: String)
 
   def parse(xml: String): List[Entry] = {
+    import HtmlTokenizer._
     val out = List.newBuilder[Entry]
     var kind: String = null      // "url" | "sitemap" when inside an entry
-    var field: String = null     // child element currently open
     var loc, lastmod, changefreq, priority = ""
-    val sb = new StringBuilder
-    def closeField(): Unit = {
-      if (field != null) {
-        val v = sb.toString.trim
-        field match {
-          case "loc" => loc = v
-          case "lastmod" => lastmod = v
-          case "changefreq" => changefreq = v
-          case "priority" => priority = v
-          case _ => ()
-        }
+    val field = new Fold.Capture // keyed by the child element open
+    def closeField(): Unit = if (field.isOpen) {
+      val name = field.key
+      val v = field.close().trim
+      name match {
+        case "loc" => loc = v
+        case "lastmod" => lastmod = v
+        case "changefreq" => changefreq = v
+        case "priority" => priority = v
       }
-      field = null
-      sb.setLength(0)
     }
     def closeEntry(): Unit = {
       closeField()
@@ -53,21 +48,21 @@ object Sitemap {
       kind = null
       loc = ""; lastmod = ""; changefreq = ""; priority = ""
     }
-    HtmlTokenizer.tokenize(xml).foreach {
-      case HtmlTokenizer.StartTag(name, _, selfClosing) => name match {
+    tokenize(xml).foreach {
+      case StartTag(name, _, selfClosing) => name match {
         case "url" | "sitemap" =>
           closeEntry()
           if (!selfClosing) kind = name
         case "loc" | "lastmod" | "changefreq" | "priority" if kind != null =>
           closeField()
-          if (!selfClosing) field = name
+          if (!selfClosing) field.open(name)
         case _ => closeField()
       }
-      case HtmlTokenizer.EndTag(name) => name match {
+      case EndTag(name) => name match {
         case "url" | "sitemap" => closeEntry()
         case _ => closeField()
       }
-      case HtmlTokenizer.Text(t) if field != null => sb.append(t)
+      case Text(t) => field.append(t)
       case _ => ()
     }
     closeEntry()
@@ -76,15 +71,10 @@ object Sitemap {
 
   /** Explodes each row into (id, kind, loc, lastmod, changefreq,
     * priority) — one typed flatMap, map-only. */
-  def entryRows(df: DataFrame, idCol: String, xmlCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(xmlCol).cast("string"))
-      .as[(Long, String)]
-      .flatMap { case (id, xml) =>
-        parse(Option(xml).getOrElse("")).map(e =>
-          (id, e.kind, e.loc, e.lastmod, e.changefreq, e.priority))
-      }
-      .toDF(idCol, "kind", "loc", "lastmod", "changefreq", "priority")
-  }
+  def entryRows(df: DataFrame, idCol: String, xmlCol: String): DataFrame =
+    Fold.rows(df, idCol, xmlCol, "kind", "loc", "lastmod", "changefreq",
+        "priority") { (id, xml) =>
+      parse(xml).map(e =>
+        (id, e.kind, e.loc, e.lastmod, e.changefreq, e.priority))
+    }
 }

@@ -1,7 +1,6 @@
 package graft.html
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 
 /** DOM template fingerprinting — pages generated by the same CMS
   * template share their tag STRUCTURE while differing in text and
@@ -26,46 +25,42 @@ object Template {
   private val M = 2147483647L // 2^31 - 1
   private val B = 131L
 
-  /** Structure string: tag names in document order, end tags
-    * `/`-prefixed, `>`-joined. */
-  def structure(htmlText: String): String = {
+  /** Structure string and start-tag count, from one token pass. */
+  private def scan(htmlText: String): (String, Long) = {
     val sb = new StringBuilder
+    var nTags = 0L
     HtmlTokenizer.tokenize(htmlText).foreach {
       case HtmlTokenizer.StartTag(name, _, _) =>
         if (sb.nonEmpty) sb.append('>')
         sb.append(name)
+        nTags += 1
       case HtmlTokenizer.EndTag(name) =>
         if (sb.nonEmpty) sb.append('>')
         sb.append('/').append(name)
       case _ => ()
     }
-    sb.toString
+    (sb.toString, nTags)
   }
 
-  /** Rolling hash of the structure string (0 for tag-less input). */
-  def fingerprint(htmlText: String): Long = {
-    val s = structure(htmlText)
+  private def hash(s: String): Long = {
     var h = 0L
     var i = 0
     while (i < s.length) { h = (h * B + s.charAt(i).toLong) % M; i += 1 }
     h
   }
 
+  /** Structure string: tag names in document order, end tags
+    * `/`-prefixed, `>`-joined. */
+  def structure(htmlText: String): String = scan(htmlText)._1
+
+  /** Rolling hash of the structure string (0 for tag-less input). */
+  def fingerprint(htmlText: String): Long = hash(structure(htmlText))
+
   /** (id, template_hash, n_tags) — one typed map, map-only. */
   def templateRows(df: DataFrame, idCol: String,
-                   htmlCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(htmlCol).cast("string"))
-      .as[(Long, String)]
-      .map { case (id, h) =>
-        val s = Option(h).getOrElse("")
-        val nTags = HtmlTokenizer.tokenize(s).count {
-          case HtmlTokenizer.StartTag(_, _, _) => true
-          case _ => false
-        }
-        (id, fingerprint(s), nTags.toLong)
-      }
-      .toDF(idCol, "template_hash", "n_tags")
-  }
+                   htmlCol: String): DataFrame =
+    Fold.rows(df, idCol, htmlCol, "template_hash", "n_tags") { (id, h) =>
+      val (s, nTags) = scan(h)
+      Some((id, hash(s), nTags))
+    }
 }

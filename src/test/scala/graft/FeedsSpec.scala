@@ -44,6 +44,12 @@ class FeedsSpec extends AnyFunSuite {
     assert(Feeds.items("").isEmpty)
   }
 
+  test("an item left open at end of document emits no row") {
+    val xml = "<rss><channel><item><title>A</title></item>" +
+      "<item><title>B</title><link>http://site/b</link>"
+    assert(Feeds.items(xml) == Vector(FeedItem("rss", 0, "A", "", "")))
+  }
+
   test("rss pubDate is case-folded by the tokenizer; first-wins per field") {
     val xml = "<rss><channel><item><title>A</title><title>B</title>" +
       "<PUBDATE>d1</PUBDATE><pubDate>d2</pubDate></item></channel></rss>"

@@ -4,7 +4,8 @@ import org.scalacheck.{Gen, Prop, Properties}
 import org.scalacheck.Prop.forAll
 
 import graft.analyzers.{PyText, TextAnalyzer}
-import graft.html.{Boilerplate, DomBuilder}
+import graft.html.{Anchors, Boilerplate, DomBuilder, Feeds, JsonLd, Markdown, Meta,
+  Outline, PubDate, Sitemap, Template}
 import graft.ops.Dedup
 import graft.tables.Tables
 
@@ -191,6 +192,52 @@ object GraftProps extends Properties("graft") {
       Boilerplate.normalizeWs(t).contains(text) || text.isEmpty ||
         text == Boilerplate.normalizeWs(t)
     }
+
+  /** Runs every public per-page fold in `html/`; callers check only that none throws. */
+  private def runHtmlFolds(s: String): Unit = {
+    Meta.extract(s); Meta.metaRefresh(s); Meta.alternates(s); Meta.nextLink(s)
+    Anchors.extract(s); Anchors.outlinkProfile(s, "h.example")
+    Outline.headings(s); JsonLd.blocks(s); PubDate.extract("http://h/2021/02/03/", s)
+    Template.structure(s); Template.fingerprint(s)
+    Sitemap.parse(s); Feeds.items(s); Markdown.render(s)
+  }
+
+  private val markupText: Gen[String] = Gen.listOf(Gen.frequency(
+    4 -> Gen.oneOf("<title>", "</title>", "<h1>", "</h2>", "<h3/>", "<a href=x>",
+      "<a href='y' rel='nofollow'/>", "</a>", "<meta http-equiv=refresh content='0;url=z'>",
+      "<link rel=alternate hreflang=fr href=/fr>", "<script type=application/ld+json>",
+      "</script>", "<rss>", "<feed>", "<item>", "<entry>", "</item>", "<link>", "<pubDate>",
+      "<urlset>", "<url>", "<loc>", "</loc>", "<![CDATA[", "]]>", "<!--", "-->", "&amp;",
+      "<table><tr><td>", "<ul><li>", "<pre>", "<time datetime=2020-02-29>", "\"", "'", "<", ">"),
+    1 -> anyText)).map(_.mkString)
+
+  private val foldFixtures: Seq[String] = Seq(
+    """<!DOCTYPE html><html><head><title> Fixture &amp; Page </title>
+      |<meta charset="UTF-8"><meta name="description" content="d">
+      |<meta name="robots" content="noindex, nofollow">
+      |<meta property="og:title" content="OG"><meta property="article:published_time"
+      |content="2021-02-03T04:05:06Z"><meta http-equiv="refresh" content="5; url='/next'">
+      |<link rel="canonical" href="http://h.example/p"><link rel="Alternate" hreflang="de"
+      |href="http://h.example/de"><link rel="next" href="http://h.example/p2"><base href="/">
+      |<script type="application/ld+json">{"@type":"NewsArticle","headline":"H"}</script>
+      |</head><body><h1>Top <b>story</b></h1><p>Intro with <a href="/in">a link</a> and
+      |<a href="http://other.example/x" rel="nofollow ugc">another</a>.</p><h2>Part</h2>
+      |<ul><li>one</li><li>two</li></ul><table><tr><th>k</th><td>v</td></tr></table>
+      |<pre>  code  </pre><blockquote>quote</blockquote><time datetime="2020-02-29">x</time>
+      |<a href="mailto:a@b">mail</a></body></html>""".stripMargin,
+    """<?xml version="1.0"?><rss version="2.0"><channel><title>C</title>
+      |<item><title><![CDATA[First & Raw]]></title><link>http://h/a?x=1&amp;y=2</link>
+      |<pubDate>Mon, 02 Jan 2023 10:00:00 GMT</pubDate></item></channel></rss>""".stripMargin,
+    """<?xml version="1.0"?><urlset><url><loc>http://h/a</loc><lastmod>2024-01-01</lastmod>
+      |<changefreq>daily</changefreq><priority>0.5</priority></url></urlset>""".stripMargin)
+
+  property("html folds never throw on arbitrary markup") =
+    forAll(markupText) { s => runHtmlFolds(s); true }
+
+  property("html folds never throw on any prefix of a fixture page") =
+    Prop.all(foldFixtures.map { page =>
+      Prop((0 to page.length).forall { i => runHtmlFolds(page.substring(0, i)); true })
+    }: _*)
 
   property("simhash hamming distance is a metric-ish bound in [0, 64]") =
     forAll(anyText, anyText) { (a, b) =>

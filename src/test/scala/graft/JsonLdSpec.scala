@@ -33,6 +33,12 @@ class JsonLdSpec extends AnyFunSuite {
     assert(JsonLd.blocks(html) == Vector("""{"headline":"a <b> c"}"""))
   }
 
+  test("an ld+json script left open at end of document emits no block") {
+    val html = """<script type="application/ld+json">{"a":1}</script>""" +
+      """<script type="application/ld+json">{"b":2}"""
+    assert(JsonLd.blocks(html) == Vector("""{"a":1}"""))
+  }
+
   test("articleRows: JSON paths incl. ['@type'] and nested author.name") {
     import spark.implicits._
     val html =

@@ -5,6 +5,10 @@ import scala.util.Random
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions.{call_function, col, levenshtein, lit}
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+
 import graft.functions.{GraftExtensions, LevenshteinBounded}
 
 /** Banded-Levenshtein semantics: exact parity with the classic
@@ -34,6 +38,15 @@ class LevenshteinBoundedSpec extends AnyFunSuite {
     assert(LevenshteinBounded.compute("same", "same", 0) == 0)
     assert(LevenshteinBounded.compute("abcdefgh", "a", 3) == -1)
     assert(LevenshteinBounded.compute("a", "b", -1) == -1)
+  }
+
+  test("a radius near Int.MaxValue gives the exact distance, interpreted and codegen") {
+    assert(LevenshteinBounded.compute("kitten", "sitting", Int.MaxValue) == 3)
+    val expr = LevenshteinBounded(Literal("kitten"), Literal("sitting"),
+      Literal(Int.MaxValue))
+    assert(expr.eval(InternalRow.empty) == 3)
+    val codegen = GenerateUnsafeProjection.generate(Seq(expr), false)
+    assert(codegen(InternalRow.empty).getInt(0) == 3)
   }
 
   test("the SQL expression matches the built-in inside the radius") {

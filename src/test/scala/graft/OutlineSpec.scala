@@ -29,8 +29,13 @@ class OutlineSpec extends AnyFunSuite {
     assert(got == Vector((1, "1", ""), (1, "2", "real")))
   }
 
-  test("unclosed heading never emits; null safe") {
-    assert(Outline.headings("<h1>dangling").isEmpty)
+  test("unclosed heading emits at end of document; null safe") {
+    assert(Outline.headings("<h1>dangling") == Vector((1, "1", "dangling")))
     assert(Outline.headings(null).isEmpty)
+  }
+
+  test("a new heading start closes an unclosed one") {
+    assert(Outline.headings("<h1>dangling<h2>next</h2>") ==
+      Vector((1, "1", "dangling"), (2, "1.1", "next")))
   }
 }

@@ -71,6 +71,18 @@ class SparkEntrySpec extends AnyFunSuite {
     val statuses = out.groupBy(col("status")).count().as[(String, Long)].collect().toMap
     assert(statuses.getOrElse("oversize", 0L) > 0, s"statuses=$statuses")
     assert(statuses.getOrElse("ok", 0L) > 0)
+    val inputs = corpus.select(col("url"), col("warc_ts"), length(col("html")),
+        col("lang")).as[(String, java.sql.Timestamp, Int, String)]
+      .collect().map(r => r._1 -> r).toMap
+    out.where(col("status") === "oversize").collect().foreach { r =>
+      val (url, ts, size, lang) = inputs(r.url)
+      assert(size > 10000)
+      assert(r == graft.extract.DocResult(url, ts, lang, "unknown", "",
+        size.toLong, "oversize", s"payload $size bytes exceeds budget 10000",
+        "", 0, "", Nil, Nil, "unsigned", "other", Nil, Nil, Nil, Nil,
+        "", "", Nil, "unknown", "unknown", 0L, 0L, 0.0, "uncertain",
+        "poor", "ocr", "2.1"))
+    }
   }
 
   test("minhash finds the jittered near-duplicates") {
